@@ -996,7 +996,6 @@ def pq_index(
     n_sub: int = 4,
     n_cells_coarse: int = 4,
     n_cells_code: int = 4,
-    protect: bool = False,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(xcodes, assign, codebooks): the maintained IVF-PQ serving index —
     coarse cell assignments plus PQ codes pivoted to ONE row per vector
@@ -1014,18 +1013,11 @@ def pq_index(
     training rounds, the encode and the assignment scan run with full
     parallelism; assignment/codebooks/codes are each materialized once
     (id-sized metadata frames) because the chain re-derives kmeans per
-    reference without a barrier.
-
-    ``protect=True`` marks every materialized frame session-lifetime
-    (sweep-exempt) and ALSO eagerly checkpoints the assembled xcodes —
-    the memoized-serving-structure mode (batch-115 precedent): callers
-    that maintain ONE index per (session, dataset) pass it so the
-    between-query RDD sweep cannot evict the index the cached plan
-    references."""
-    from prosnet_prefect_pipelines_spark.session import (
-        fan_out,
-        protect_checkpoint,
-    )
+    reference without a barrier. A caller that maintains ONE index per
+    (session, dataset) holds the three frames through ``session.memo``
+    and ``session.pin``, which protects them from the between-query
+    sweep."""
+    from prosnet_prefect_pipelines_spark.session import fan_out
 
     df = fan_out(df)
     assign = ivf_assign(
@@ -1045,10 +1037,6 @@ def pq_index(
     xcodes = pq_codes_positional(codes, cbs).join(
         assign.select(F.col("id").alias("xid"), F.col("cell")), on="xid"
     )
-    if protect:
-        xcodes = xcodes.localCheckpoint(eager=True)
-        for frame in (assign, cbs, xcodes):
-            protect_checkpoint(frame)
     return xcodes, assign, cbs
 
 

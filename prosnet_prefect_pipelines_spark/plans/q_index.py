@@ -20,17 +20,16 @@ from prosnet_prefect_pipelines_spark.operators import graph as G
 from prosnet_prefect_pipelines_spark.operators import relational as R
 from prosnet_prefect_pipelines_spark.plans.catalog import register
 from prosnet_prefect_pipelines_spark.plans.tpch_graph import TRIPLES_CTE, triples_from_tpch
-from prosnet_prefect_pipelines_spark.session import register_memo_cache
+from prosnet_prefect_pipelines_spark.session import memo
 
 CITY_ROOT = "urn:class/7"
 
-# opt r12 (VERDICT r11 item 4, the #10 memo idiom): the P279 subtree of
-# the city root is an ontology-closure fixture of the (memoized) triples
-# table — one bounded BFS per (app_id, sf_dir), not per plan build — and
-# the five scalar-builder Column trees are session-invariant unresolved
-# expressions over fixed field names, built once per app. Both reset by
-# reset_memo_fixtures so bench repeat-cold passes pay the full build.
-_CITY_CACHE: dict = register_memo_cache({})
+# opt r12 (VERDICT r11 item 4): the P279 subtree of the city root is an
+# ontology-closure fixture of the (memoized) triples table — one bounded
+# BFS per (session, sf_dir), not per plan build — and the five
+# scalar-builder Column trees are session-invariant unresolved
+# expressions over fixed field names, built once per session. Both are
+# session.memo entries, so bench repeat-cold passes pay the full build.
 
 
 def _city_subtree_cls(spark, triples, sf_dir) -> list[str]:
@@ -39,29 +38,21 @@ def _city_subtree_cls(spark, triples, sf_dir) -> list[str]:
     Memoized as a plain Python list (ontology-bounded — it feeds a
     broadcast join either way), so a memo hit builds the subtree frame
     from a local relation with zero Spark jobs."""
-    app_id = spark.sparkContext.applicationId
-    key = ("subtree", app_id, sf_dir)
-    got = _CITY_CACHE.get(key)
-    if got is None:
-        for stale in [k for k in _CITY_CACHE if k[1] != app_id]:
-            del _CITY_CACHE[stale]
+
+    def build():
         edges = R.triple_pattern(triples, "?src", "wdt:P279", "?dst")
-        got = [
+        return [
             r[0]
             for r in G.descendants(edges, [CITY_ROOT], reflexive=True).collect()
         ]
-        _CITY_CACHE[key] = got
-    return got
+
+    return memo(spark, ("q_index.city_subtree", sf_dir), build)
 
 
 def _city_post_cols(spark):
     """(post select list, label Column) — the scalar-builder trees."""
-    app_id = spark.sparkContext.applicationId
-    key = ("cols", app_id)
-    got = _CITY_CACHE.get(key)
-    if got is None:
-        for stale in [k for k in _CITY_CACHE if k[1] != app_id]:
-            del _CITY_CACHE[stale]
+
+    def build():
         # [lat, lng] emitted as scalar doubles: list-typed output columns
         # break the harness canonicalizer's sort; the array shape is
         # pytest-covered
@@ -79,9 +70,10 @@ def _city_post_cols(spark):
         label = scalar.label_creator_place(
             F.col("name"), F.col("country"), F.col("feature_code")
         )
-        got = (cols, label)
-        _CITY_CACHE[key] = got
-    return got
+        return cols, label
+
+    return memo(spark, ("q_index.city_cols",), build)
+
 
 CITY_INDEX_SQL = f"""
 WITH RECURSIVE

@@ -59,7 +59,7 @@ from prosnet_prefect_pipelines_spark.plans.q_pipeline10 import (
     _ivfpq_cos64,
 )
 from prosnet_prefect_pipelines_spark.plans.q_pipeline115 import _query_stream
-from prosnet_prefect_pipelines_spark.session import register_memo_cache
+from prosnet_prefect_pipelines_spark.session import memo, pin
 
 _K = 3
 _EVEN = "vec_id % 2 = 0"
@@ -198,59 +198,46 @@ SELECT qid, xid, adc_cos FROM (
 """
 )
 
+
 # the encoded index is a MAINTAINED serving structure — memoized per
-# (session, sf) and checkpoint-protected, like batch 115's IVF index
-_PQ_INDEX_CACHE: dict = register_memo_cache({})
-
-
+# (session, sf) and pinned, like batch 115's IVF index
 def _pq_serving_index(spark, sf_dir):
     """-> (xcodes (xid, cell, _xp, _xn2), carr one-row broadcast
-    centroid array, cbarr one-row broadcast codebook array).
+    centroid array, cbarr one-row broadcast codebook array, |xcodes|).
 
     xcodes is the even-half encoded index (``similarity.pq_index``,
-    r12 positional-codes form) as an eager checkpoint; carr carries
-    the coarse centroid table as ONE array row so the per-batch probe
-    plan is independent of n_cells; cbarr carries the codebook entries
-    the per-query ADC lookup table is built from."""
-    from prosnet_prefect_pipelines_spark.session import protect_checkpoint
+    r12 positional-codes form), pinned; carr carries the coarse
+    centroid table as ONE array row so the per-batch probe plan is
+    independent of n_cells; cbarr carries the codebook entries the
+    per-query ADC lookup table is built from."""
 
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    cached = _PQ_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
-    for k in [k for k in _PQ_INDEX_CACHE if k[0] != app_id]:
-        del _PQ_INDEX_CACHE[k]
-    even = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .filter(F.col("vec_id") % 2 == 0)
-        .select("vec_id", "embedding")
-    )
-    xcodes, _assign, cbs = S.pq_index(
-        even, "vec_id", "embedding", dim=64,
-        n_sub=_PQ_SUB, n_cells_coarse=_PQ_CELLS, n_cells_code=_PQ_CELLS,
-    )
-    xcodes = xcodes.localCheckpoint(eager=True)
-    protect_checkpoint(xcodes)
-    cbarr_df = S.pq_codebook_array(cbs).localCheckpoint(eager=True)
-    protect_checkpoint(cbarr_df)
-    cents = (
-        even.select(
-            F.col("vec_id").alias("cid"),
-            F.col("embedding").alias("cv"),
-            S.norm(F.col("embedding")).alias("ncv"),
+    def build():
+        even = (
+            spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+            .filter(F.col("vec_id") % 2 == 0)
+            .select("vec_id", "embedding")
         )
-        .orderBy("cid")
-        .limit(_PQ_CELLS)
-        .localCheckpoint(eager=True)
-    )
-    protect_checkpoint(cents)
-    # checkpointed with the index: no per-batch re-aggregation of the
-    # one-row centroid array (opt r11, same as batch 115)
-    carr = S.centroid_array(cents).localCheckpoint(eager=True)
-    protect_checkpoint(carr)
-    _PQ_INDEX_CACHE[key] = (xcodes, carr, cbarr_df, xcodes.count())
-    return _PQ_INDEX_CACHE[key]
+        xcodes, _assign, cbs = S.pq_index(
+            even, "vec_id", "embedding", dim=64,
+            n_sub=_PQ_SUB, n_cells_coarse=_PQ_CELLS, n_cells_code=_PQ_CELLS,
+        )
+        xcodes = pin(xcodes)
+        cbarr_df = pin(S.pq_codebook_array(cbs))
+        cents = pin(
+            even.select(
+                F.col("vec_id").alias("cid"),
+                F.col("embedding").alias("cv"),
+                S.norm(F.col("embedding")).alias("ncv"),
+            )
+            .orderBy("cid")
+            .limit(_PQ_CELLS)
+        )
+        # pinned with the index: no per-batch re-aggregation of the
+        # one-row centroid array (opt r11, same as batch 115)
+        carr = pin(S.centroid_array(cents))
+        return xcodes, carr, cbarr_df, xcodes.count()
+
+    return memo(spark, ("q_pipeline118.pq_serving_index", sf_dir), build)
 
 
 @register("stream_ann_ivfpq_monitor", oracle=IVFPQ_MONITOR_SQL,

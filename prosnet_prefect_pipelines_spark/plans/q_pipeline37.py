@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from prosnet_prefect_pipelines_spark.plans.catalog import register
-from prosnet_prefect_pipelines_spark.session import register_memo_cache
+from prosnet_prefect_pipelines_spark.session import memo
 
 _ROLE = "analyst_eu"
 
@@ -128,25 +128,16 @@ FROM ranked WHERE rn <= {_TOPK}
 
 
 # opt r12 (VERDICT r11 issue 1): the event-type enum is session-invariant
-# per dataset — memoize the one distinct scan per (app_id, sf_dir) so
+# per dataset — memoize the one distinct scan per (session, sf_dir) so
 # repeated plan constructions launch NO Spark job (the old code ran a
 # full-column distinct scan of events at every DataFrame construction,
 # blocking the driver — at 100 TB an extra corpus pass per plan build).
-# Reset by reset_memo_fixtures, so bench repeat-cold passes still pay it.
-_ETYPES_CACHE: dict = register_memo_cache({})
-
-
+# A session.memo entry, so bench repeat-cold passes still pay it.
 def _event_types(ev, sf_dir: str) -> list[str]:
-    app_id = ev.sparkSession.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    cached = _ETYPES_CACHE.get(key)
-    if cached is not None:
-        return cached
-    for stale in [k for k in _ETYPES_CACHE if k[0] != app_id]:
-        del _ETYPES_CACHE[stale]
-    etypes = sorted(r[0] for r in ev.select("event_type").distinct().collect())
-    _ETYPES_CACHE[key] = etypes
-    return etypes
+    return memo(
+        ev.sparkSession, ("q_pipeline37.event_types", sf_dir),
+        lambda: sorted(r[0] for r in ev.select("event_type").distinct().collect()),
+    )
 
 
 @register("session_similarity_topk", oracle=SESSION_SIM_SQL, covers=["J1", "A1", "O6"])

@@ -104,34 +104,30 @@ GROUP BY lang
 # deterministic per-(session, sf) fixture consumed only by stage 4 —
 # memoized like q_pipeline42's train split (opt r12): its construction
 # cost was ~3 s of Catalyst planning at the pins, re-paid per call.
-# Narrow rows only (doc_id, lang, w) are session-protected; the
-# text-bearing keep2 stays unpinned (the r11 block-manager judgment)
-# and dbb stays transient inside one build. reset_memo_fixtures drops
-# the fixture, so bench repeat-cold passes pay the full build.
+# Narrow rows only (doc_id, lang, w) are pinned; the text-bearing keep2
+# stays unpinned (the r11 block-manager judgment) and dbb stays
+# transient inside one build. reset_memo_fixtures drops the fixture, so
+# bench repeat-cold passes pay the full build.
 from prosnet_prefect_pipelines_spark.session import (  # noqa: E402
-    register_memo_cache,
+    fan_out,
+    memo,
+    pin,
 )
-
-_KEEPLIST_CACHE: dict = register_memo_cache({})
 
 
 def _v3_keep3(spark, sf_dir):
     """Stages 1-3 of the v3 pipeline, memoized per (session, sf): the
-    narrow (doc_id, lang, w) survivor list behind a session-protected
-    lazy pin."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    cached = _KEEPLIST_CACHE.get(key)
-    if cached is not None:
-        return cached
-    for k in [k for k in _KEEPLIST_CACHE if k[0] != app_id]:
-        del _KEEPLIST_CACHE[k]
+    narrow (doc_id, lang, w) survivor list, pinned."""
+    return memo(
+        spark, ("q_pipeline85.keep3", sf_dir),
+        lambda: pin(_build_v3_keep3(spark, sf_dir)),
+    )
 
+
+def _build_v3_keep3(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
         F.col("text").isNotNull()
     )
-    from prosnet_prefect_pipelines_spark.session import fan_out
-
     # stage 1: exact dedup
     hashed = docs.withColumn("h", F.md5("text"))
     # fan_out AFTER the dedup window: AQE coalesces the window's
@@ -210,14 +206,9 @@ def _v3_keep3(spark, sf_dir):
             ).alias("rare_micro")
         )
     )
-    keep3 = keep2.join(rare, "doc_id").filter(
+    return keep2.join(rare, "doc_id").filter(
         F.col("rare_micro") <= 900000
-    ).select("doc_id", "lang", "w").localCheckpoint(eager=False)
-    from prosnet_prefect_pipelines_spark.session import protect_checkpoint
-
-    protect_checkpoint(keep3)
-    _KEEPLIST_CACHE[key] = keep3
-    return keep3
+    ).select("doc_id", "lang", "w")
 
 
 @register("llm_corpus_pipeline_v3", oracle=V3_SQL, covers=["A2", "J1", "O6"])

@@ -12,26 +12,22 @@ from pyspark.sql import functions as F
 
 from prosnet_prefect_pipelines_spark.plans.catalog import register
 from prosnet_prefect_pipelines_spark.render.person import materialize_inverses, render_person
-from prosnet_prefect_pipelines_spark.session import register_memo_cache
-
-# static select-expression trees for persons_from_tpch (opt r11: the
-# ~0.4 s/call of py4j Column construction is session-invariant — same
-# pattern as render.person._EXPR_CACHE)
-_PERSON_COLS_CACHE: dict = register_memo_cache({})
+from prosnet_prefect_pipelines_spark.session import memo
 
 
 def persons_from_tpch(spark, sf_dir):
     """APIS person entities (model.APIS_PERSON_SCHEMA) from customer rows.
 
     Twin of the ``person`` CTE in RENDER_PERSON_SQL — keep in lockstep.
+    The select-expression trees are session-invariant, so they are
+    memoized (opt r11: ~0.4 s/call of py4j Column construction — same
+    pattern as render.person's template expressions).
     """
     customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    app_id = spark.sparkContext.applicationId
-    cols = _PERSON_COLS_CACHE.get(app_id)
-    if cols is not None:
-        return customer.select(*cols)
-    for stale in [a for a in _PERSON_COLS_CACHE if a != app_id]:
-        del _PERSON_COLS_CACHE[stale]
+    return customer.select(*memo(spark, ("q_render.person_cols",), _person_cols))
+
+
+def _person_cols():
     k = F.col("c_custkey")
     year = (F.lit(1900) + k % 100).cast("string")
     year2 = (F.lit(1930) + k % 100).cast("string")
@@ -80,8 +76,7 @@ def persons_from_tpch(spark, sf_dir):
             )
         ).alias("text"),
     ]
-    _PERSON_COLS_CACHE[app_id] = cols
-    return customer.select(*cols)
+    return cols
 
 
 # The DuckDB twin renders every template as one UNION ALL branch over the

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from prosnet_prefect_pipelines_spark.session import register_memo_cache
+from prosnet_prefect_pipelines_spark.session import memo, pin
 
 # DuckDB-side definition. MUST stay semantically identical to
 # triples_from_tpch() below; both derive only from the parquet views.
@@ -133,32 +133,16 @@ triples AS (
 """
 
 
-# one materialization of the derived triples view per (session, sf): a
-# dozen catalog queries read it, and without memoization each re-scans
-# the 5 source tables across 20+ union branches. localCheckpoint keeps
-# the built rows as blocks — the shared-dimension-view pattern.
-_TRIPLES_CACHE: dict[tuple[str, str], DataFrame] = register_memo_cache({})
-
-
 def triples_from_tpch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Build (or reuse) the triples DataFrame; TRIPLES_CTE is the oracle twin."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    cached = _TRIPLES_CACHE.get(key)
-    if cached is not None:
-        return cached
-    # evict frames from stopped/restarted sessions — they hold
-    # localCheckpoint blocks that can never be used again
-    for k in [k for k in _TRIPLES_CACHE if k[0] != app_id]:
-        del _TRIPLES_CACHE[k]
-    out = _build_triples(spark, sf_dir).localCheckpoint(eager=False)
-    # session-lifetime fixture: exempt from the harnesses' between-query
-    # checkpoint sweeps (session.sweep_persistent_rdds)
-    from prosnet_prefect_pipelines_spark.session import protect_checkpoint
+    """Build (or reuse) the triples DataFrame; TRIPLES_CTE is the oracle twin.
 
-    protect_checkpoint(out)
-    _TRIPLES_CACHE[key] = out
-    return out
+    One pinned materialization per (session, sf): a dozen catalog
+    queries read it, and without the memo each re-scans the 5 source
+    tables -- the shared-dimension-view pattern."""
+    return memo(
+        spark, ("tpch_graph.triples", sf_dir),
+        lambda: pin(_build_triples(spark, sf_dir)),
+    )
 
 
 def _build_triples(spark: SparkSession, sf_dir: str) -> DataFrame:

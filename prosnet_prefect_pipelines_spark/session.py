@@ -14,8 +14,33 @@ nevertheless written for a multi-executor cluster at ~100 TB:
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Hashable
+from typing import TypeVar
 
-from pyspark.sql import SparkSession
+from py4j.protocol import Py4JError
+from pyspark.sql import DataFrame, SparkSession
+
+_T = TypeVar("_T")
+
+# Spark 4.1 logs one WARN per streaming state snapshot read without a
+# checksum file; the engine writes none, so the line carries nothing.
+_CHECKSUM_LOGGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "ChecksumCheckpointFileManager"
+)
+_QUIET_APPS: set[str] = set()
+
+
+def _quiet_checksum_warnings(spark: SparkSession) -> None:
+    """Raise that one logger to ERROR, once per SparkContext."""
+    app = spark.sparkContext.applicationId
+    if app in _QUIET_APPS:
+        return
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        _CHECKSUM_LOGGER, jvm.org.apache.logging.log4j.Level.ERROR
+    )
+    _QUIET_APPS.add(app)
 
 
 def get_spark(app_name: str = "prosnet_spark", cpus: int | None = None) -> SparkSession:
@@ -78,6 +103,7 @@ def get_spark(app_name: str = "prosnet_spark", cpus: int | None = None) -> Spark
         )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _quiet_checksum_warnings(spark)
     return spark
 
 
@@ -101,6 +127,15 @@ def fan_out(df, spark: SparkSession | None = None):
     return df.repartition(sess.sparkContext.defaultParallelism)
 
 
+def _checkpoint_rdd(df):
+    """The persisted RDD behind a ``localCheckpoint``-ed frame, else None."""
+    try:
+        rdd = df._jdf.queryExecution().analyzed().rdd()
+    except Py4JError:
+        return None  # not a LogicalRDD
+    return rdd if rdd.getStorageLevel().isValid() else None
+
+
 def unpersist_checkpoint(df) -> None:
     """Release the storage blocks behind a ``localCheckpoint``-ed frame.
 
@@ -114,91 +149,93 @@ def unpersist_checkpoint(df) -> None:
     truncates lineage; there is nothing to recompute from).
     Best-effort: silently ignores frames that are not checkpoint-backed.
     """
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        plan.rdd().unpersist(False)
-    except Exception:
-        pass
+    rdd = _checkpoint_rdd(df)
+    if rdd is not None:
+        rdd.unpersist(False)
 
 
-# (app_id, rdd_id) pairs of SESSION-LIFETIME checkpointed fixtures
-# (the memoized corpus / lsh-pair / triples / PQ-index views shared
-# across catalog queries): sweep_persistent_rdds must never unpersist
-# these — a lazy localCheckpoint that one query materialized and a
-# later query reuses is unrecoverable once its blocks are dropped
-# (lineage is truncated). Keyed by application id because RDD ids
-# restart near 0 in a new SparkContext within the same Python process:
-# a bare-int registry could collide a stale protected id with an
-# unrelated fresh RDD and permanently exempt it from the sweep
-# (r12 ADVICE finding).
+# (app_id, rdd_id) pairs of the checkpoints behind pinned frames
+# (:func:`pin`): sweep_persistent_rdds never unpersists these. Keyed by
+# application id because RDD ids restart near 0 in a new SparkContext
+# within the same Python process: a bare-int registry could collide a
+# stale protected id with an unrelated fresh RDD and permanently exempt
+# it from the sweep.
 _PROTECTED_CKPT_IDS: set[tuple[str, int]] = set()
 
-# registered memoized-fixture caches (plan modules' per-(app_id, sf)
-# dicts of checkpointed serving structures). Central registry so a
-# harness can reset ALL memoized state to first-touch conditions in
-# one call — see :func:`reset_memo_fixtures`.
-_MEMO_CACHES: list[dict] = []
+# THE memo store, (applicationId, key) -> value, written only by
+# :func:`memo` and cleared by :func:`reset_memo_fixtures`. Exposed as a
+# one-element list under its old name for readers that sum entry counts.
+_MEMO: dict[tuple[str, Hashable], object] = {}
+_MEMO_CACHES: list[dict] = [_MEMO]
 
 
-def register_memo_cache(cache: dict) -> dict:
-    """Register a plan module's memoized-fixture dict; returns it so
-    modules can write ``_CACHE: dict = register_memo_cache({})``."""
-    _MEMO_CACHES.append(cache)
-    return cache
+def memo(spark: SparkSession, key: Hashable, build: Callable[[], _T]) -> _T:
+    """Session-lifetime memo: ``build()`` once per ``(applicationId, key)``.
+
+    ``key`` names the fixture and its inputs (e.g. ``("dedup.corpus",
+    sf_dir)``); the application id scopes it to the live SparkContext,
+    and entries left by stopped contexts are evicted on the next miss
+    (their frames reference blocks that can never be read again). Any
+    Spark frame the value holds must come from :func:`pin`, so it is
+    materialized before the memo hands it out and survives the sweep.
+    """
+    app = spark.sparkContext.applicationId
+    if (app, key) not in _MEMO:
+        for stale in [k for k in _MEMO if k[0] != app]:
+            del _MEMO[stale]
+        _MEMO[(app, key)] = build()
+    return _MEMO[(app, key)]
 
 
-def _app_id(spark_or_df) -> str:
-    sess = getattr(spark_or_df, "sparkSession", spark_or_df)
-    return sess.sparkContext.applicationId
+def pin(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` as a checkpoint and exempt it from the sweep.
 
-
-def protect_checkpoint(df) -> None:
-    """Mark a checkpointed fixture as session-lifetime (sweep-exempt)."""
-    try:
-        _PROTECTED_CKPT_IDS.add(
-            (_app_id(df), int(df._jdf.queryExecution().analyzed().rdd().id()))
-        )
-    except Exception:
-        pass
+    The only way a memo holds a Spark frame. A frame that already is a
+    checkpoint is not checkpointed again: a materialized one is only
+    protected, a lazy one is materialized in place. Eager, because a
+    lazy fixture's lineage runs through other lazy checkpoints that the
+    between-query sweep would free before the fixture's first read.
+    """
+    rdd = _checkpoint_rdd(df)
+    if rdd is None:
+        df = df.localCheckpoint(eager=True)
+        rdd = _checkpoint_rdd(df)
+    elif not rdd.isCheckpointed():
+        rdd.count()
+    _PROTECTED_CKPT_IDS.add((df.sparkSession.sparkContext.applicationId, int(rdd.id())))
+    return df
 
 
 def reset_memo_fixtures(spark: SparkSession) -> int:
-    """Reset every memoized serving structure to first-touch state.
+    """Reset every memoized fixture to first-touch state.
 
-    Clears all registered memo caches (:func:`register_memo_cache`),
-    drops every checkpoint protection, and sweeps the now-unprotected
-    blocks; returns the number of RDDs unpersisted. After this call the
-    session measures like a fresh one for fixture/index build purposes:
-    the next query that touches a memoized corpus / LSH pair frame /
-    PQ index rebuilds it from scratch. The bench's repeat-cold passes
-    call this so pass 2..N include the same index-build work pass 1
-    paid (r10 ADVICE: memoized indexes made repeat 'cold' medians
-    biased low and hid index-build regressions from the gate).
+    Every memo value is built through :func:`memo` and every frame it
+    holds is pinned through :func:`pin`, so clearing the one store and
+    dropping every pin protection reaches all of them; the now
+    unprotected blocks are swept and the number of RDDs unpersisted is
+    returned. The next query that touches a memoized corpus, LSH pair
+    frame or serving index rebuilds it, so repeat-cold bench passes pay
+    the same build work as the first pass.
     """
-    for cache in _MEMO_CACHES:
-        cache.clear()
+    _MEMO.clear()
     _PROTECTED_CKPT_IDS.clear()
     return sweep_persistent_rdds(spark)
 
 
 def sweep_persistent_rdds(spark: SparkSession) -> int:
-    """Unpersist every non-protected persistent RDD; returns the count.
+    """Unpersist every persistent RDD that is not pinned; returns the count.
 
-    Legal between independent queries in this engine, whose persistent
-    blocks fall into exactly three classes: (1) ``localCheckpoint``
-    fixpoint/stream state — dead once the owning query's result has
-    been collected; (2) the memoized fixture views and serving indexes,
-    which register via :func:`protect_checkpoint` and are skipped; and
-    (3) the lazy distrank range blocks (``operators/distrank.py
-    _ranged_parts`` persists MEMORY_AND_DISK inside the returned plan)
-    plus the near-dup monitor's foreachBatch barrier — both dead after
-    their query's action completes, and released HERE: the distrank
-    APIs are deliberately job-free at construction so they cannot
-    unpersist deterministically themselves, and their contract is
-    caller-must-sweep (harnesses call this between queries; long-lived
-    embedding servers must do the same or accumulate one range block
-    per distrank plan executed). Stale protections from stopped
-    SparkContexts are pruned by app id — they can never match again.
+    Legal between any two independent queries, because memo values are
+    built through :func:`memo` and the frames they hold are pinned
+    through :func:`pin`, materialized: a fixture a later query reads
+    never depends on a block the sweep can free. Everything else
+    persisted is dead once the query that made it has run:
+    ``localCheckpoint`` fixpoint and stream state, the lazy distrank
+    range blocks (``operators/distrank.py _ranged_parts``, job-free at
+    construction, so caller-must-sweep) and the near-dup monitor's
+    foreachBatch barrier. A plan built before the sweep must not be
+    executed after it. Protections left by stopped SparkContexts are
+    pruned by app id; they can never match again.
     """
     n = 0
     try:
@@ -229,6 +266,7 @@ def pin_session_conf(spark: SparkSession) -> SparkSession:
     # (model.read_events) — exact in both engines.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.codegen.hugeMethodLimit", "8000")
+    _quiet_checksum_warnings(spark)
     # cold-plan workload: skip whole-stage codegen compile (see get_spark)
     spark.conf.set(
         "spark.sql.codegen.wholeStage", os.environ.get("SPARK_GRAFT_WSCG", "false")

@@ -34,7 +34,7 @@ import math
 import os
 from contextlib import contextmanager
 
-from prosnet_prefect_pipelines_spark.session import register_memo_cache
+from prosnet_prefect_pipelines_spark.session import memo
 
 _MIN_PARTITIONS = 8
 
@@ -42,22 +42,14 @@ _MIN_PARTITIONS = 8
 # path).count() jobs at every plan construction — at 100 TB a corpus
 # pass per plan build (same class as session_similarity's plan-build
 # distinct scan, VERDICT r11 issue 1). The count feeds a partition-width
-# decision only, never results; memoize it per (app_id, path). Reset by
-# reset_memo_fixtures so bench repeat-cold passes still pay one count.
-_EST_COUNT_CACHE: dict = register_memo_cache({})
-
-
+# decision only, never results; memoize it per (session, path). A
+# session.memo entry, so bench repeat-cold passes still pay one count.
 def staged_row_count(spark, path: str) -> int:
     """Memoized parquet row count for partitioning estimates."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, path)
-    got = _EST_COUNT_CACHE.get(key)
-    if got is None:
-        for stale in [k for k in _EST_COUNT_CACHE if k[0] != app_id]:
-            del _EST_COUNT_CACHE[stale]
-        got = spark.read.parquet(path).count()
-        _EST_COUNT_CACHE[key] = got
-    return got
+    return memo(
+        spark, ("tuning.row_count", path),
+        lambda: spark.read.parquet(path).count(),
+    )
 
 
 def stream_shuffle_partitions(spark, est_rows: int, n_batches: int = 4) -> int:

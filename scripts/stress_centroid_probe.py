@@ -36,7 +36,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from prosnet_prefect_pipelines_spark.operators import similarity as S  # noqa: E402
 from prosnet_prefect_pipelines_spark.session import (  # noqa: E402
     get_spark,
-    protect_checkpoint,
+    pin,
     sweep_persistent_rdds,
 )
 from stress_ann import vectors  # noqa: E402
@@ -63,8 +63,7 @@ def main() -> None:
             F.col("embedding").alias("cv"),
             S.norm(F.col("embedding")).alias("ncv"),
         )
-        ck = cents.localCheckpoint(eager=True)
-        protect_checkpoint(ck)
+        ck = pin(cents)
         carr = S.centroid_array(ck)
         times = []
         for _ in range(2):
@@ -105,25 +104,21 @@ def main() -> None:
     xcodes, _assign, cbs = S.pq_index(
         idx, "id", "embedding", DIM, n_sub=4, n_cells_coarse=n_cells
     )
-    cbarr = S.pq_codebook_array(cbs).localCheckpoint(eager=True)
-    protect_checkpoint(cbarr)
+    cbarr = pin(S.pq_codebook_array(cbs))
     raw_db = (
         S.ivf_assign(idx, "id", "embedding", n_cells=n_cells, rank_limit=1)
         .select(F.col("id").alias("neighbor"), "v", "nv", "cell")
-        .localCheckpoint(eager=True)
     )
-    protect_checkpoint(raw_db)
-    code_db = xcodes.localCheckpoint(eager=True)  # (xid, cell, _xp, _xn2)
-    protect_checkpoint(code_db)
+    raw_db = pin(raw_db)
+    code_db = pin(xcodes)  # (xid, cell, _xp, _xn2)
     queries = (
         vectors(spark, n_queries, DIM)
         .select(
             (F.col("id") + 50_000_000).alias("qid"),
             F.col("v").alias("qv"),
         )
-        .localCheckpoint(eager=True)
     )
-    protect_checkpoint(queries)
+    queries = pin(queries)
     cents2 = (
         idx.limit(n_cells)
         .select(
@@ -131,9 +126,8 @@ def main() -> None:
             F.col("embedding").alias("cv"),
             S.norm(F.col("embedding")).alias("ncv"),
         )
-        .localCheckpoint(eager=True)
     )
-    protect_checkpoint(cents2)
+    cents2 = pin(cents2)
     carr = S.centroid_array(cents2)
     probed = (
         queries.crossJoin(F.broadcast(carr))
@@ -148,9 +142,8 @@ def main() -> None:
             ).alias("_p"),
         )
         .select("qid", "qv", "qn", F.col("_p.cid").alias("cell"))
-        .localCheckpoint(eager=True)
     )
-    protect_checkpoint(probed)
+    probed = pin(probed)
 
     def _time(label: str, df_builder) -> dict:
         times, n = [], None

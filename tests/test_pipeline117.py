@@ -76,18 +76,27 @@ def test_redelivery_idempotent(spark, sf_dir, tmp_path):
     assert got == ref
 
 
+def _final_stats_memos() -> list:
+    """The session.memo entries holding the monitor's final stats."""
+    from prosnet_prefect_pipelines_spark.session import _MEMO
+
+    return [v for (_app, key), v in _MEMO.items() if key[0] == "q_pipeline117.final_stats"]
+
+
 def test_monitors_share_one_maintained_state(spark, sf_dir):
     """The two metric queries read ONE maintained monitor (r11 opt):
     after the margin monitor runs, the length-bias monitor must not
     replay the stream — its rows derive from the memoized final stats."""
-    P117._FINAL_STATS_CACHE.clear()
+    from prosnet_prefect_pipelines_spark.session import reset_memo_fixtures
+
+    reset_memo_fixtures(spark)
     _rows(P117.q_stream_preference_margin_monitor(spark, sf_dir))
-    assert len(P117._FINAL_STATS_CACHE) == 1
-    cached_df = next(iter(P117._FINAL_STATS_CACHE.values()))
+    assert len(_final_stats_memos()) == 1
+    cached_df = _final_stats_memos()[0]
     got = _rows(P117.q_stream_length_bias_monitor(spark, sf_dir))
     # still the same single entry (no second replay), same frame object
-    assert len(P117._FINAL_STATS_CACHE) == 1
-    assert next(iter(P117._FINAL_STATS_CACHE.values())) is cached_df
+    assert len(_final_stats_memos()) == 1
+    assert _final_stats_memos()[0] is cached_df
     want = _rows(P116.q_length_bias_audit(spark, sf_dir))
     assert got == want
 
@@ -98,9 +107,9 @@ def test_memo_reset_forces_fresh_replay(spark, sf_dir):
     from prosnet_prefect_pipelines_spark.session import reset_memo_fixtures
 
     _rows(P117.q_stream_preference_margin_monitor(spark, sf_dir))
-    assert len(P117._FINAL_STATS_CACHE) == 1
+    assert len(_final_stats_memos()) == 1
     reset_memo_fixtures(spark)
-    assert len(P117._FINAL_STATS_CACHE) == 0
+    assert len(_final_stats_memos()) == 0
     got = _rows(P117.q_stream_preference_margin_monitor(spark, sf_dir))
     want = _rows(P116.q_preference_margin_report(spark, sf_dir))
     assert got == want

@@ -14,10 +14,15 @@ registry existed).
 
 from __future__ import annotations
 
+import ast
+import glob
+import os
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from prosnet_prefect_pipelines_spark.session import (
-    protect_checkpoint,
+    pin,
     sweep_persistent_rdds,
     unpersist_checkpoint,
 )
@@ -45,11 +50,10 @@ def test_unpersist_checkpoint_ignores_plain_frames(spark):
 
 def test_sweep_skips_protected_fixtures(spark):
     sweep_persistent_rdds(spark)
-    fixture = spark.range(500).select("id").localCheckpoint(eager=False)
-    protect_checkpoint(fixture)
+    fixture = pin(spark.range(500).select("id"))
     dead = spark.range(200).select("id").localCheckpoint()
     assert dead.count() == 200
-    assert fixture.count() == 500  # materialize the lazy checkpoint
+    assert fixture.count() == 500
     swept = sweep_persistent_rdds(spark)
     assert swept >= 1
     # the protected fixture must still be persisted AND readable
@@ -58,9 +62,25 @@ def test_sweep_skips_protected_fixtures(spark):
     unpersist_checkpoint(fixture)
 
 
+def test_pin_never_checkpoints_twice(spark):
+    """pin materializes and protects; a frame that already is a
+    checkpoint keeps its one checkpoint (an eager one is only protected,
+    a lazy one is materialized in place)."""
+    from prosnet_prefect_pipelines_spark.session import _PROTECTED_CKPT_IDS
+
+    app = spark.sparkContext.applicationId
+    for eager in (True, False):
+        ck = spark.range(40).localCheckpoint(eager=eager)
+        rdd = ck._jdf.queryExecution().analyzed().rdd()
+        assert pin(ck) is ck
+        assert rdd.isCheckpointed()
+        assert (app, int(rdd.id())) in _PROTECTED_CKPT_IDS
+        unpersist_checkpoint(ck)
+
+
 def test_memoized_corpus_survives_sweep(spark, sf_dir):
-    """The q_dedup corpus memo registers itself as protected: a sweep
-    between two queries that share it must not break the second one."""
+    """The q_dedup corpus memo is pinned: a sweep between two queries
+    that share it must not break the second one."""
     from prosnet_prefect_pipelines_spark.plans.q_dedup import corpus
 
     c = corpus(spark, sf_dir)
@@ -93,51 +113,141 @@ def test_protection_is_app_scoped(spark):
 
 def test_reset_memo_fixtures_forces_rebuild(spark, sf_dir):
     """reset_memo_fixtures returns the session to first-touch state:
-    caches empty, protections dropped, blocks swept — the next corpus()
-    call rebuilds rather than reusing a dangling checkpoint."""
-    from prosnet_prefect_pipelines_spark.plans.q_dedup import _CORPUS_CACHE, corpus
+    memo store empty, protections dropped, blocks swept — the next
+    corpus() call rebuilds rather than reusing a dangling checkpoint."""
+    from prosnet_prefect_pipelines_spark.plans.q_dedup import corpus
     from prosnet_prefect_pipelines_spark.session import (
+        _MEMO,
         _PROTECTED_CKPT_IDS,
         reset_memo_fixtures,
     )
 
     c = corpus(spark, sf_dir)
     n1 = c.count()
-    assert _CORPUS_CACHE  # memoized
+    assert any(key == ("dedup.corpus", sf_dir) for _app, key in _MEMO)
     reset_memo_fixtures(spark)
-    assert not _CORPUS_CACHE
+    assert not _MEMO
     assert not _PROTECTED_CKPT_IDS
     c2 = corpus(spark, sf_dir)
     assert c2 is not c  # rebuilt, not the dangling frame
     assert c2.count() == n1
 
 
-def test_all_plan_memo_caches_registered(spark):
-    """Every module-level *_CACHE dict in plans/ must be registered so
-    reset_memo_fixtures clears it (an unregistered cache would hand out
-    frames whose checkpoint blocks the reset just dropped)."""
-    import glob as _glob
-    import os as _os
-    import re as _re
+def test_memo_fixture_survives_sweep_before_first_run(spark, sf_dir):
+    """A query's result must not depend on whether an earlier query ran
+    before the between-query sweep: building dedup_minhash_lsh without
+    running it memoizes the corpus and LSH pair fixtures, and the sweep
+    that follows must leave dedup_clusters readable and identical."""
+    from prosnet_prefect_pipelines_spark.plans.catalog import load
+    from prosnet_prefect_pipelines_spark.session import reset_memo_fixtures
 
-    import prosnet_prefect_pipelines_spark.plans as plans_pkg
-    from prosnet_prefect_pipelines_spark.plans import catalog
-    from prosnet_prefect_pipelines_spark.session import _MEMO_CACHES
+    queries, _ = load()
+    reset_memo_fixtures(spark)
+    want = sorted(queries["dedup_clusters"](spark, sf_dir).collect())
+    reset_memo_fixtures(spark)
+    queries["dedup_minhash_lsh"](spark, sf_dir)  # built, never run
+    assert sweep_persistent_rdds(spark) >= 1  # the dead build-time checkpoints
+    got = sorted(queries["dedup_clusters"](spark, sf_dir).collect())
+    assert len(want) > 0
+    assert got == want
 
-    catalog.load()  # import every plan module so registrations ran
 
-    # scan the whole package: operator/render modules may declare
-    # registered caches too (e.g. render.person._EXPR_CACHE)
-    pkg_dir = _os.path.dirname(_os.path.dirname(plans_pkg.__file__))
-    declared = registered = 0
-    for path in _glob.glob(
-        _os.path.join(pkg_dir, "**", "*.py"), recursive=True
-    ):
-        if _os.path.basename(path) == "session.py":
-            continue  # the registry itself
-        src = open(path).read()
-        decls = _re.findall(r"^_[A-Z_]*CACHE[^=]*=.*$", src, flags=_re.M)
-        declared += len(decls)
-        registered += sum("register_memo_cache" in d for d in decls)
-    assert declared == registered, "cache dict declared without registration"
-    assert registered == len(_MEMO_CACHES) > 0
+_PKG = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_ENGINE = os.path.join(_PKG, "prosnet_prefect_pipelines_spark")
+# module-level dicts that are not session memos: the query registry
+# (keyed by query name, filled at import) lives in catalog.py
+_REGISTRY_MODULES = {"plans/catalog.py"}
+# q_pipeline20 namespaces a scratch DIRECTORY by application id; it
+# caches no value
+_APP_ID_READERS = {"plans/q_pipeline20.py"}
+
+
+def test_no_memo_outside_session_store():
+    """Every memo goes through session.memo, so reset_memo_fixtures
+    clears it: no engine module outside session.py declares a
+    module-level cache dict, keys anything by applicationId, or
+    protects a checkpoint itself (pin is the only protection)."""
+    found = []
+    for path in glob.glob(os.path.join(_ENGINE, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, _ENGINE).replace(os.sep, "/")
+        if rel == "session.py":
+            continue
+        tree = ast.parse(open(path).read())
+        for node in tree.body:
+            value = getattr(node, "value", None)
+            if (
+                isinstance(node, (ast.Assign, ast.AnnAssign))
+                and rel not in _REGISTRY_MODULES
+                and (
+                    (isinstance(value, ast.Dict) and not value.keys)
+                    or (isinstance(value, ast.Call) and ast.unparse(value.func) == "dict")
+                )
+            ):
+                found.append(f"{rel}:{node.lineno} module-level dict")
+        for node in ast.walk(tree):
+            name = getattr(node, "attr", None) or getattr(node, "id", None)
+            if name in ("protect_checkpoint", "register_memo_cache", "_MEMO"):
+                found.append(f"{rel}:{node.lineno} {name}")
+            if name == "applicationId" and rel not in _APP_ID_READERS:
+                found.append(f"{rel}:{node.lineno} applicationId")
+    assert not found, found
+
+
+def _frames(value):
+    if isinstance(value, DataFrame):
+        yield value
+    elif isinstance(value, (tuple, list)):
+        for v in value:
+            yield from _frames(v)
+
+
+def test_memo_frames_are_pinned_and_reset_empties_store(spark, sf_dir):
+    """Every frame a memo holds is a materialized, sweep-protected
+    checkpoint (so no memo value is a lazy localCheckpoint), and
+    reset_memo_fixtures leaves the store empty. Covers the five
+    fixtures that used to be pinned lazily plus the non-frame memos."""
+    from prosnet_prefect_pipelines_spark.plans import (
+        q_dedup,
+        q_index,
+        q_pipeline37,
+        q_pipeline42,
+        q_pipeline85,
+        q_render,
+        tpch_graph,
+    )
+    from prosnet_prefect_pipelines_spark.render.person import render_person
+    from prosnet_prefect_pipelines_spark.session import (
+        _MEMO,
+        _MEMO_CACHES,
+        _PROTECTED_CKPT_IDS,
+        reset_memo_fixtures,
+    )
+    from prosnet_prefect_pipelines_spark.streaming.tuning import staged_row_count
+
+    reset_memo_fixtures(spark)
+    triples = tpch_graph.triples_from_tpch(spark, sf_dir)
+    q_dedup.lsh_pairs(spark, sf_dir)
+    q_pipeline42._train_split(spark, sf_dir)
+    q_pipeline85._v3_keep3(spark, sf_dir)
+    q_index._city_subtree_cls(spark, triples, sf_dir)
+    q_index._city_post_cols(spark)
+    q_pipeline37._event_types(
+        spark.read.parquet(f"{sf_dir}/events.parquet"), sf_dir
+    )
+    render_person(q_render.persons_from_tpch(spark, sf_dir))
+    staged_row_count(spark, f"{sf_dir}/nation.parquet")
+
+    assert _MEMO_CACHES == [_MEMO]
+    assert len(_MEMO) == 11
+    app = spark.sparkContext.applicationId
+    frames = [f for v in _MEMO.values() for f in _frames(v)]
+    assert len(frames) == 5
+    for frame in frames:
+        rdd = frame._jdf.queryExecution().analyzed().rdd()
+        assert rdd.isCheckpointed()  # materialized before memo returned it
+        assert (app, int(rdd.id())) in _PROTECTED_CKPT_IDS
+
+    reset_memo_fixtures(spark)
+    assert not _MEMO
+    assert sum(len(c) for c in _MEMO_CACHES) == 0
+    assert not _PROTECTED_CKPT_IDS

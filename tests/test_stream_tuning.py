@@ -21,8 +21,11 @@ def test_large_replay_scales_up_to_cap(spark):
         int(spark.conf.get("spark.sql.shuffle.partitions")),
     )
     assert stream_shuffle_partitions(spark, 10_000_000_000, 4) == cap
-    # mid-scale: proportional to rows/batch / target(2000)
-    assert stream_shuffle_partitions(spark, 160_000, 4) == 20
+    # mid-scale: proportional to rows/batch / target(2000). The expected
+    # width is derived from the clamp so it lies strictly between the
+    # floor and the cap on any host with cap >= 10 (16 at 4 cores).
+    want = max(8, (8 + cap) // 2)
+    assert stream_shuffle_partitions(spark, want * 2000 * 4, 4) == want
 
 
 def test_context_manager_sets_and_restores(spark):
